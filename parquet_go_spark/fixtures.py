@@ -105,7 +105,8 @@ def make_transcripts(
                 pa.string()
             )
         )
-    text = pa.chunked_array(text_chunks)
+    # typed: with no rows there is no chunk to infer the type from
+    text = pa.chunked_array(text_chunks, type=pa.string())
 
     # ts: per-conv start + cumsum of per-turn deltas (turn 0 = start + delta0)
     cum = np.cumsum(deltas)

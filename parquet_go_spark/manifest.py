@@ -723,11 +723,11 @@ def _expire_locked_distributed(spark, table_dir: str, keep: int) -> dict:
                 if batch:
                     yield _pd.DataFrame(batch, columns=["name", "mtime"])
 
-    par = min(len(shard_files),
-              spark.sparkContext.defaultParallelism) or 1
-    keep_df = spark.createDataFrame(
-        _pd.DataFrame({"f": sorted(shard_files)}), "f string"
-    ).repartition(par).mapInPandas(referenced, "name string")
+    from .table import _items_df
+
+    keep_df = _items_df(
+        spark, {"f": sorted(shard_files)}, "f string"
+    ).mapInPandas(referenced, "name string")
     disk_df = spark.createDataFrame(
         _pd.DataFrame({"d": [cdir]}), "d string"
     ).mapInPandas(list_chunks, "name string, mtime double")

@@ -4,7 +4,11 @@ The user-facing equivalent of the reference's ``NewWriter``/``NewReader``
 (⟨ref⟩ writer.go, reader.go), Iceberg-style: encoded chunk files + JSON
 manifests with atomic snapshot commits, checkpoint resume, projection
 pushdown and manifest-stats chunk skipping. Everything is DataFrame-in /
-DataFrame-out; the only shuffle is the chunk-assignment repartition.
+DataFrame-out. Driver-side work-item lists (chunk files, manifest
+shards, direct-path file groups) enter Spark as JVM-local scans
+(``_items_df``), so no Python pass and no exchange run in front of the
+decode and direct-encode tasks; the shuffle write's one exchange is the
+chunk-assignment repartition.
 """
 
 from __future__ import annotations
@@ -92,6 +96,19 @@ def _inflight_guard(pos: int):
         return wrapper
 
     return deco
+
+
+def _items_df(spark: SparkSession, columns: dict, ddl: str) -> DataFrame:
+    """Work-item DataFrame from driver-side lists ({name: values}, in
+    ``ddl`` order). Built from a pyarrow Table, Spark plans it as a
+    JVM-only LocalTableScan whatever the Arrow setting — a pandas or
+    row list would scan in Python workers and need an exchange to
+    spread. It has p = min(n, defaultParallelism) partitions, and
+    partition k holds the contiguous items floor(k·n/p) ≤ i <
+    floor((k+1)·n/p): a fixed listing always lands in the same tasks."""
+    import pyarrow as pa
+
+    return spark.createDataFrame(pa.table(columns), ddl)
 
 
 def validate_schema(df: DataFrame, ddl: str = TRANSCRIPT_DDL) -> None:
@@ -620,12 +637,12 @@ def _commit_append_distributed(
 
         merged_refs: dict[str, dict] = {}
         if work:
-            par = min(len(work), spark.sparkContext.defaultParallelism) or 1
-            wdf = spark.createDataFrame(
-                pd.DataFrame(work,
-                             columns=["shard", "parent_file", "new_file"]),
+            shards, pfiles, nfiles = zip(*work)
+            wdf = _items_df(
+                spark,
+                {"shard": shards, "parent_file": pfiles, "new_file": nfiles},
                 "shard string, parent_file string, new_file string",
-            ).repartition(par)
+            )
             rows = wdf.mapInPandas(
                 merge_shards,
                 "shard string, file string, n_chunks long, n_rows long, "
@@ -661,7 +678,6 @@ def read_table(
     table_dir: str,
     columns: list[str] | None = None,
     predicates: dict | None = None,
-    parallelism: int | None = None,
     push_row_filter: bool = False,
     snapshot_id: int | None = None,
 ) -> DataFrame:
@@ -750,10 +766,11 @@ def read_table(
     udf_schema = StructType(udf_fields)
 
     if distributed:
-        par = parallelism or spark.sparkContext.defaultParallelism
+        # the shard scan's OUTPUT is redistributed: one shard's surviving
+        # chunks would otherwise all decode in that shard's task
         files_df = _manifest_files_df(
             spark, table_dir, refs, predicates
-        ).repartition(par)
+        ).repartition(spark.sparkContext.defaultParallelism)
     else:
         entries = prune_entries(listing["entries"], predicates)
         if not entries:
@@ -765,23 +782,17 @@ def read_table(
         # entry against the snapshot's, so a chunk file rewritten in
         # place after this snapshot fails loudly instead of silently
         # decoding newer data (time-travel integrity).
-        files_pdf = pd.DataFrame(
+        files_df = _items_df(
+            spark,
             {
                 "file": [os.path.join(table_dir, e["file"])
                          for e in entries],
                 "chunk_id": [e["chunk_id"] for e in entries],
-                "data_crc": pd.array([e.get("data_crc") for e in entries],
-                                     dtype="Int64"),
-                "enc_bytes": pd.array([e.get("enc_bytes") for e in entries],
-                                      dtype="Int64"),
-            }
-        )
-        par = parallelism or min(len(entries),
-                                 spark.sparkContext.defaultParallelism)
-        files_df = spark.createDataFrame(
-            files_pdf,
+                "data_crc": [e.get("data_crc") for e in entries],
+                "enc_bytes": [e.get("enc_bytes") for e in entries],
+            },
             "file string, chunk_id string, data_crc long, enc_bytes long",
-        ).repartition(par)
+        )
     if push_row_filter and predicates:
         from .decode import normalize_predicate
 
@@ -852,11 +863,10 @@ def compact(
         ]
     )[0])
     cols = [f.name for f in schema.fields]
-    files = [os.path.join(table_dir, e["file"]) for e in small]
-    par = min(len(files), spark.sparkContext.defaultParallelism)
-    files_df = spark.createDataFrame(
-        pd.DataFrame({"file": files}), "file string"
-    ).repartition(par)
+    files_df = _items_df(
+        spark, {"file": [os.path.join(table_dir, e["file"]) for e in small]},
+        "file string",
+    )
     # same null-fill mapping read_table uses: small chunks written
     # before a schema-evolution append may predate newer columns
     try:
@@ -926,21 +936,18 @@ def write_table_direct(
     files = sorted(input_files)
     groups = [files[i : i + files_per_chunk]
               for i in range(0, len(files), files_per_chunk)]
-    rows = [(f"{chunk_prefix}{i:06d}", json.dumps(g))
-            for i, g in enumerate(groups)]
-    par = min(len(rows), spark.sparkContext.defaultParallelism) or 1
-    # repartitionByRange, not repartition(par): round-robin starts at a
-    # RANDOM bucket per input partition, so the chunk->task grouping —
-    # and with it the per-task FSST symbol-table reuse groups, hence
-    # the encoded bytes — changed run to run (r5: two identical 4-core
-    # direct runs produced 121327330 vs 120661853 B). Range partitioning
-    # on the zero-padded chunk_id is deterministic for a fixed input
-    # listing AND keeps consecutive chunks in one task, which is what
-    # the reuse ratio-guard wants (neighboring chunks share vocabulary).
-    files_df = spark.createDataFrame(
-        pd.DataFrame(rows, columns=["chunk_id", "files"]),
+    # chunk -> task grouping is the items scan's slicing: with n chunks
+    # and p = min(n, defaultParallelism) tasks, task k encodes chunks
+    # floor(k·n/p) .. floor((k+1)·n/p)-1. It is fixed for a fixed input
+    # listing — the per-task FSST symbol-table reuse groups, hence the
+    # encoded bytes, depend on it — and keeps neighboring chunks (which
+    # share vocabulary) in one task, which the reuse ratio-guard wants.
+    files_df = _items_df(
+        spark,
+        {"chunk_id": [f"{chunk_prefix}{i:06d}" for i in range(len(groups))],
+         "files": [json.dumps(g) for g in groups]},
         "chunk_id string, files string",
-    ).repartitionByRange(par, "chunk_id")
+    )
     fn = make_direct_encode_fn(table_dir, key_cols, overrides, resume,
                                bloom_cols)
     entries_df = files_df.mapInArrow(
@@ -983,6 +990,17 @@ def write_table_direct(
     }
 
 
+def _shard_files_df(spark, table_dir: str, refs: dict) -> DataFrame:
+    """One ``shard_file`` row per manifest shard of ``refs``."""
+    import os
+
+    return _items_df(
+        spark, {"shard_file": [os.path.join(table_dir, r["file"])
+                               for r in refs["manifest_shards"]]},
+        "shard_file string",
+    )
+
+
 def _manifest_files_df(spark, table_dir: str, refs: dict,
                        predicates: dict | None) -> DataFrame:
     """Distributed manifest scan: one task per shard file parses its
@@ -993,13 +1011,7 @@ def _manifest_files_df(spark, table_dir: str, refs: dict,
     a chunk entry."""
     import os
 
-    shard_files = [os.path.join(table_dir, r["file"])
-                   for r in refs["manifest_shards"]]
-    par = min(len(shard_files),
-              spark.sparkContext.defaultParallelism) or 1
-    sdf = spark.createDataFrame(
-        pd.DataFrame({"shard_file": shard_files}), "shard_file string"
-    ).repartition(par)
+    sdf = _shard_files_df(spark, table_dir, refs)
 
     def parse_shards(pdfs):
         import json as _json
@@ -1035,11 +1047,10 @@ def _decode_entries_df(spark, table_dir, entries, schema) -> DataFrame:
     import os
 
     manifest.check_chunk_layout(entries)
-    files = [os.path.join(table_dir, e["file"]) for e in entries]
-    par = min(len(files), spark.sparkContext.defaultParallelism)
-    files_df = spark.createDataFrame(
-        pd.DataFrame({"file": files}), "file string"
-    ).repartition(par)
+    files_df = _items_df(
+        spark, {"file": [os.path.join(table_dir, e["file"]) for e in entries]},
+        "file string",
+    )
     try:
         from pyspark.sql.pandas.types import to_arrow_schema
 
@@ -1246,13 +1257,7 @@ def search_text(
         # distributed: token-bloom check runs in the shard-scan tasks
         import os
 
-        shard_files = [os.path.join(table_dir, r["file"])
-                       for r in refs["manifest_shards"]]
-        par = min(len(shard_files),
-                  spark.sparkContext.defaultParallelism) or 1
-        sdf = spark.createDataFrame(
-            pd.DataFrame({"shard_file": shard_files}), "shard_file string"
-        ).repartition(par)
+        sdf = _shard_files_df(spark, table_dir, refs)
 
         def bloom_scan(pdfs):
             import json as _json
@@ -1362,15 +1367,7 @@ def column_stats(table_dir: str, column: str,
     if (spark is not None
             and refs.get("manifest_shards") is not None
             and refs.get("n_chunks", 0) >= DISTRIBUTED_MANIFEST_MIN_CHUNKS):
-        import os
-
-        shard_files = [os.path.join(table_dir, r["file"])
-                       for r in refs["manifest_shards"]]
-        par = min(len(shard_files),
-                  spark.sparkContext.defaultParallelism) or 1
-        sdf = spark.createDataFrame(
-            pd.DataFrame({"shard_file": shard_files}), "shard_file string"
-        ).repartition(par)
+        sdf = _shard_files_df(spark, table_dir, refs)
 
         def shard_stats(pdfs):
             import json as _json

@@ -27,8 +27,9 @@ schedules ~10⁵ right-sized tasks whose kernels each slice multiple
 `_ck` groups (chunk identity = the `_ck` value, so chunk bytes,
 resume and manifests stay partition-count-independent).""",
     "decode_read_table": """Decode is a parallelized local scan: the file list (one row per
-manifest-selected chunk) is repartitioned and each task `MapInArrow`s
-its chunk files back to rows. There is NO shuffle — chunk pruning and
+manifest-selected chunk) is a JVM `LocalTableScan` sliced into
+contiguous runs, and each task `MapInArrow`s its chunk files back to
+rows. There is NO shuffle — chunk pruning and
 column projection happened before the plan was built (manifest
 min/max + blob selection), which is why nothing appears as
 PushedFilters here: the pushdown lives a level above Spark's scan.""",

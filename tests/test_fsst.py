@@ -152,3 +152,13 @@ def test_fixture_text_slicing_invariant():
     b = make_transcripts(500, seed=7, _text_slice_rows=13)
     assert b.column("text").num_chunks > 1
     assert a.to_pydict() == b.to_pydict()
+
+
+def test_fixture_empty_table():
+    """Zero conversations give an empty table of the fixture schema
+    (there is no text slice to infer the column type from)."""
+    from parquet_go_spark.fixtures import SCHEMA
+
+    t = make_transcripts(0)
+    assert t.num_rows == 0
+    assert t.schema == SCHEMA

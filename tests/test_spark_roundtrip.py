@@ -1405,3 +1405,141 @@ def test_map_shredding_projects_key_bytes(spark, transcripts, tmp_path):
     got_nulls = proj.filter(F.col("`attrs.role`").isNull()).count()
     assert got_nulls == df.filter(F.col("attrs").isNull()).count()
     assert got_nulls > 0
+
+
+def _write_direct_source(src: str, n_conv: int, n_files: int, seed: int):
+    """Transcripts sliced in key order into ``n_files`` parquet files
+    (each file then holds one key range)."""
+    import pyarrow.parquet as pq
+
+    from parquet_go_spark.fixtures import make_transcripts
+
+    os.makedirs(src)
+    t = make_transcripts(n_conv, seed=seed)
+    step = -(-t.num_rows // n_files)
+    for i in range(n_files):
+        pq.write_table(t.slice(i * step, step), f"{src}/f{i:02d}.parquet")
+    return sorted(glob.glob(os.path.join(src, "*.parquet"))), t
+
+
+def _scan_under_map_in_arrow(df) -> tuple[str, str]:
+    """(name of the MapInArrow node's child, whole plan) of ``df``'s
+    executed plan."""
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    lines = plan.splitlines()
+    i = next(k for k, line in enumerate(lines) if "MapInArrow" in line)
+    return lines[i + 1].split("+- ")[-1].split(" ")[0], plan
+
+
+@pytest.mark.parametrize("arrow", ["true", "false"])
+def test_work_item_scans_are_jvm_local(spark, tmp_path, monkeypatch, arrow):
+    """Driver-side work-item lists (chunk files, direct-path file
+    groups) feed the decode/encode tasks from a LocalTableScan: no
+    Python pass over the list and no exchange, whatever the Arrow
+    setting (the conftest turns it on; Spark's default is off)."""
+    from parquet_go_spark.decode import prune_entries
+    from pyspark.sql.types import StructType
+
+    mapped = []
+    cls = type(spark.range(1))
+    orig = cls.mapInArrow
+
+    def recording(self, *args, **kwargs):
+        out = orig(self, *args, **kwargs)
+        mapped.append(out)
+        return out
+
+    def check(df):
+        child, plan = _scan_under_map_in_arrow(df)
+        assert child == "LocalTableScan", plan
+        assert "Exchange" not in plan and "ExistingRDD" not in plan, plan
+
+    key = "spark.sql.execution.arrow.pyspark.enabled"
+    before = spark.conf.get(key)
+    spark.conf.set(key, arrow)
+    monkeypatch.setattr(cls, "mapInArrow", recording)
+    try:
+        files, t = _write_direct_source(str(tmp_path / "src"), 120, 6,
+                                        seed=9)
+        out = str(tmp_path / "tbl")
+        table.write_table_direct(spark, files, out, resume=False)
+        assert len(mapped) == 1
+        check(mapped[0])
+
+        full = table.read_table(spark, out)
+        check(full)
+        assert full.count() == t.num_rows
+
+        entries = sorted(manifest.load(out)["entries"],
+                         key=lambda e: e["chunk_id"])
+        pred = {"conv_id": (entries[1]["columns"]["conv_id"]["max"],
+                            entries[2]["columns"]["conv_id"]["min"])}
+        assert len(prune_entries(entries, pred)) == 2
+        check(table.read_table(spark, out, predicates=pred))
+
+        schema = StructType.fromJson(
+            json.loads(manifest.load(out)["schema_ddl"]))
+        dec = table._decode_entries_df(spark, out, entries[:2], schema)
+        check(dec)
+        assert dec.count() == entries[0]["n_rows"] + entries[1]["n_rows"]
+    finally:
+        spark.conf.set(key, before)
+
+
+@pytest.mark.parametrize("n", [3, 4, 1000])
+def test_items_df_contiguous_slices(spark, n):
+    """The work-item scan has p = min(n, defaultParallelism) partitions
+    and partition k holds items floor(k·n/p) .. floor((k+1)·n/p)-1."""
+    import pyarrow as pa
+
+    def tag(batches):
+        from pyspark import TaskContext
+
+        pid = TaskContext.get().partitionId()
+        for b in batches:
+            yield pa.RecordBatch.from_arrays(
+                [b.column(0), pa.array([pid] * b.num_rows, pa.int32())],
+                ["i", "p"])
+
+    p = min(n, spark.sparkContext.defaultParallelism)
+    df = table._items_df(spark, {"i": list(range(n))}, "i long")
+    assert df.rdd.getNumPartitions() == p
+    got = {r.i: r.p for r in df.mapInArrow(tag, "i long, p int").collect()}
+    want = {i: k for k in range(p)
+            for i in range(k * n // p, (k + 1) * n // p)}
+    assert got == want
+
+
+def test_direct_write_is_deterministic(spark, tmp_path):
+    """Two direct writes of the same text-bearing listing give the same
+    chunk -> task grouping (contiguous slices of the chunk list) and
+    byte-identical chunk blobs: FSST symbol tables are reused across a
+    task's consecutive chunks, so the bytes depend on the grouping."""
+    import pyarrow.parquet as pq
+
+    files, _ = _write_direct_source(str(tmp_path / "src"), 240, 12,
+                                    seed=11)
+    p = min(len(files), spark.sparkContext.defaultParallelism)
+    volatile = ("attempt", "encode_s", "reused")
+    runs = []
+    for name in ("a", "b"):
+        out = str(tmp_path / name)
+        table.write_table_direct(spark, files, out, resume=False)
+        entries = sorted(manifest.load(out)["entries"],
+                         key=lambda e: e["chunk_id"])
+        by_task: dict = {}
+        for i, e in enumerate(entries):
+            by_task.setdefault(e["attempt"], []).append(i)
+        n = len(entries)
+        assert sorted(by_task.values()) == [
+            list(range(k * n // p, (k + 1) * n // p)) for k in range(p)]
+        runs.append((
+            [{k: v for k, v in e.items() if k not in volatile}
+             for e in entries],
+            [pq.read_table(os.path.join(out, e["file"])) for e in entries],
+        ))
+    (ents_a, blobs_a), (ents_b, blobs_b) = runs
+    assert ents_a == ents_b
+    assert all(a.equals(b) for a, b in zip(blobs_a, blobs_b))
+    assert any(m["codec"] == "fsst"
+               for m in ents_a[0]["columns"].values())
