@@ -7,11 +7,12 @@ seed 42, sized by SF) through the full engine path
 plus the N→4N-cores scaling evidence the driver asked for (a real
 N→4N executor pair is unavailable in-sandbox). The primary pair is
 local[1]→local[4], below this host's ~8-stream memory-bandwidth
-saturation point; the full curve incl. local[32] is also reported —
+saturation point; the full curve up to local[<cpus>] is also reported —
 analysis and control experiments in BENCH/BASELINE.md.
 
 Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) — also sets the
-testdata-table side queries; SPARK_GRAFT_CPUS (default 32);
+testdata-table side queries; SPARK_GRAFT_CPUS (default: the cores this
+process may run on, ``len(os.sched_getaffinity(0))``);
 SPARK_GRAFT_SCALE_LEVELS (default "1,4,<cpus>");
 SPARK_GRAFT_BENCH_REPEATS (default 2, best-of).
 
@@ -190,7 +191,8 @@ def _scan_floor(master: str, src: str, n_reps: int) -> float:
 
 def main() -> int:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS",
+                              len(os.sched_getaffinity(0))))
     sf_label = os.path.basename(sf_dir.rstrip("/")).replace("sf", "") or "0.1"
 
     workdir = tempfile.mkdtemp(prefix="pgs_bench_")

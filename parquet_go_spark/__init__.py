@@ -27,7 +27,26 @@ re-expressed Spark-first (SURVEY.md):
   ``clustering.py`` (Z-order chunk clustering).
 """
 
-from .table import (
+import sys
+import zipimport
+
+
+def forget_zip_importers() -> None:
+    """Drop every cached ``zipimporter`` from ``sys.path_importer_cache``.
+
+    Every UDF the table engine hands to Spark calls this first."""
+    # PySpark's worker calls importlib.invalidate_caches() at the start of
+    # every task, and under Python 3.11 each cached zipimporter then
+    # re-reads its whole archive directory: pyspark.zip, the py4j zip and
+    # the Spark jar on sys.path cost ~200 ms of CPU per task. Forgotten
+    # importers have nothing to re-read; PathFinder re-creates one on the
+    # next lookup from zipimport's module-level directory cache.
+    for path, finder in list(sys.path_importer_cache.items()):
+        if isinstance(finder, zipimport.zipimporter):
+            del sys.path_importer_cache[path]
+
+
+from .table import (  # noqa: E402  (submodules import the helper above)
     compact,
     count_rows,
     delete_rows,

@@ -14,6 +14,7 @@ import zlib
 import pyarrow as pa
 import pyarrow.parquet as pq
 
+from . import forget_zip_importers
 from .codec import decode_array
 
 __all__ = ["make_decode_fn", "prune_entries", "normalize_predicate"]
@@ -223,6 +224,7 @@ def make_decode_fn(columns: list[str], verify_crc: bool = True,
         return arr.take(pa.array(idx, type=pa.int64(), mask=~valid))
 
     def decode_partition(batches):
+        forget_zip_importers()
         import pyarrow.compute as pc
 
         from .encode import BLOB_COL_PREFIX

@@ -30,7 +30,7 @@ import numpy as np
 import pyarrow as pa
 import pyarrow.parquet as pq
 
-from . import manifest
+from . import forget_zip_importers, manifest
 from .codec import content_crc, encode_array
 from .plan import choose_codec, profile_array
 
@@ -519,6 +519,7 @@ def make_encode_fn(table_dir: str, key_cols: tuple[str, ...],
     overrides = overrides or {}
 
     def encode_partition(batches):
+        forget_zip_importers()
         from pyspark import TaskContext
 
         tc = TaskContext.get()
@@ -587,6 +588,7 @@ def make_direct_encode_fn(table_dir: str, key_cols: tuple[str, ...],
     overrides = overrides or {}
 
     def encode_files(batches):
+        forget_zip_importers()
         import pyarrow.compute as pc
         from pyspark import TaskContext
 

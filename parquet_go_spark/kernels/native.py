@@ -20,19 +20,25 @@ multi-worker scaling on shared-bus hosts (BENCH/BASELINE.md r4
 saturation analysis).
 
 Build model: compile-on-first-use with the system C compiler into a
-content-hashed shared object under $TMPDIR/pgs_native (atomic rename —
-concurrent Spark python workers race benignly; each loser just
-os.replace()s the identical file). Anything failing — no cc, no cffi,
-sandboxed /tmp — degrades silently to the numpy path. Set
-PGS_NO_NATIVE=1 to force the numpy path (used by the identity tests).
+content-hashed shared object under $TMPDIR/pgs_native_<uid>, a 0700
+directory (atomic rename — concurrent Spark python workers race
+benignly; each loser just os.replace()s the identical file). The
+directory and the .so must belong to this uid and be writable by no one
+else, or they are not dlopen'd. Anything failing — no cc, no cffi,
+sandboxed /tmp, a foreign or shared build directory — degrades to the
+numpy path with one RuntimeWarning per process naming the cause. Set
+PGS_NO_NATIVE=1 to force the numpy path silently (used by the identity
+tests).
 """
 
 from __future__ import annotations
 
 import hashlib
 import os
+import stat
 import subprocess
 import tempfile
+import warnings
 
 __all__ = ["lib", "ffi", "available"]
 
@@ -174,16 +180,34 @@ int64_t pgs_fsst_expand(
 """
 
 
+def _check_private(path: str, is_kind) -> None:
+    """Raise unless ``path`` itself (a symlink is not followed) passes
+    ``is_kind``, belongs to this uid and is not group- or other-writable."""
+    st = os.lstat(path)
+    if (not is_kind(st.st_mode) or st.st_uid != os.getuid()
+            or st.st_mode & (stat.S_IWGRP | stat.S_IWOTH)):
+        raise PermissionError(
+            f"{path} is not private to uid {os.getuid()} "
+            f"(owner {st.st_uid}, mode {stat.filemode(st.st_mode)})"
+        )
+
+
+def _so_path() -> tuple[str, str]:
+    """(per-uid build directory, content-hashed .so path in it)."""
+    h = hashlib.sha256((_CDEF + _SRC).encode()).hexdigest()[:16]
+    cdir = os.path.join(tempfile.gettempdir(), f"pgs_native_{os.getuid()}")
+    return cdir, os.path.join(cdir, f"pgs_{h}.so")
+
+
 def _build():
     if os.environ.get("PGS_NO_NATIVE"):
         return None, None
     import cffi
 
-    h = hashlib.sha256((_CDEF + _SRC).encode()).hexdigest()[:16]
-    cdir = os.path.join(tempfile.gettempdir(), "pgs_native")
-    so = os.path.join(cdir, f"pgs_{h}.so")
+    cdir, so = _so_path()
+    os.makedirs(cdir, mode=0o700, exist_ok=True)
+    _check_private(cdir, stat.S_ISDIR)
     if not os.path.exists(so):
-        os.makedirs(cdir, exist_ok=True)
         td = tempfile.mkdtemp(dir=cdir)
         try:
             csrc = os.path.join(td, "pgs.c")
@@ -196,6 +220,7 @@ def _build():
                  "-o", tmp, csrc],
                 check=True, capture_output=True, timeout=120,
             )
+            os.chmod(tmp, 0o755)  # cc's output mode follows the umask
             os.replace(tmp, so)  # atomic: concurrent builders converge
         finally:
             for fn in os.listdir(td):
@@ -207,6 +232,7 @@ def _build():
                 os.rmdir(td)
             except OSError:
                 pass
+    _check_private(so, stat.S_ISREG)
     f = cffi.FFI()
     f.cdef(_CDEF)
     return f, f.dlopen(so)
@@ -214,7 +240,11 @@ def _build():
 
 try:
     ffi, lib = _build()
-except Exception:  # no cc / no cffi / sandboxed tmp → numpy fallback
+except Exception as e:  # no cc / no cffi / unsafe tmp → numpy fallback
+    warnings.warn(
+        f"parquet_go_spark native FSST kernel unavailable, using numpy "
+        f"({type(e).__name__}: {e})", RuntimeWarning,
+    )
     ffi, lib = None, None
 
 

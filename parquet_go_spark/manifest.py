@@ -33,6 +33,8 @@ import os
 import tempfile
 from typing import Any
 
+from . import forget_zip_importers
+
 __all__ = ["commit", "commit_shards", "load", "load_refs",
            "expire_snapshots", "list_chunk_files", "stat_value",
            "check_chunk_layout", "ENGINE_VERSION",
@@ -689,6 +691,7 @@ def _expire_locked_distributed(spark, table_dir: str, keep: int) -> dict:
     cdir = os.path.join(table_dir, "chunks")
 
     def referenced(pdfs):
+        forget_zip_importers()
         import json as _json
         import os as _os
 
@@ -701,6 +704,7 @@ def _expire_locked_distributed(spark, table_dir: str, keep: int) -> dict:
             yield _pd.DataFrame({"name": names})
 
     def list_chunks(pdfs):
+        forget_zip_importers()
         import os as _os
 
         for pdf in pdfs:
@@ -732,6 +736,7 @@ def _expire_locked_distributed(spark, table_dir: str, keep: int) -> dict:
         _pd.DataFrame({"d": [cdir]}), "d string"
     ).mapInPandas(list_chunks, "name string, mtime double")
     def unlink_chunks(pdfs):
+        forget_zip_importers()
         import os as _os
 
         for pdf in pdfs:

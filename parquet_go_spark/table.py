@@ -8,7 +8,9 @@ DataFrame-out. Driver-side work-item lists (chunk files, manifest
 shards, direct-path file groups) enter Spark as JVM-local scans
 (``_items_df``), so no Python pass and no exchange run in front of the
 decode and direct-encode tasks; the shuffle write's one exchange is the
-chunk-assignment repartition.
+chunk-assignment repartition. Every UDF handed to Spark first calls
+``forget_zip_importers()``, so a reused Python worker does not re-read
+pyspark.zip and the Spark jar at the start of each task.
 """
 
 from __future__ import annotations
@@ -29,7 +31,7 @@ from pyspark.sql.types import (
     YearMonthIntervalType,
 )
 
-from . import manifest
+from . import forget_zip_importers, manifest
 from .decode import make_decode_fn, prune_entries
 from .encode import make_encode_fn
 
@@ -510,6 +512,7 @@ def _write_shards_distributed(entries_df: DataFrame,
     token = uuid.uuid4().hex[:12]
 
     def write_shard(key, pdf):
+        forget_zip_importers()
         import json as _json
         import os as _os
 
@@ -597,6 +600,7 @@ def _commit_append_distributed(
                 work.append((s, r["file"], None))  # enrich totals only
 
         def merge_shards(pdfs):
+            forget_zip_importers()
             import json as _json
             import os as _os
 
@@ -1014,6 +1018,7 @@ def _manifest_files_df(spark, table_dir: str, refs: dict,
     sdf = _shard_files_df(spark, table_dir, refs)
 
     def parse_shards(pdfs):
+        forget_zip_importers()
         import json as _json
 
         from . import manifest as M
@@ -1260,6 +1265,7 @@ def search_text(
         sdf = _shard_files_df(spark, table_dir, refs)
 
         def bloom_scan(pdfs):
+            forget_zip_importers()
             import json as _json
 
             from . import manifest as M
@@ -1370,6 +1376,7 @@ def column_stats(table_dir: str, column: str,
         sdf = _shard_files_df(spark, table_dir, refs)
 
         def shard_stats(pdfs):
+            forget_zip_importers()
             import json as _json
 
             for pdf in pdfs:

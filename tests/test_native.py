@@ -7,6 +7,11 @@ files. These tests run each corpus through both paths by toggling
 ``native.lib`` and compare blobs and decoded buffers byte-for-byte.
 """
 
+import os
+import shutil
+import subprocess
+import sys
+
 import numpy as np
 import pytest
 
@@ -129,3 +134,55 @@ def test_cache_reuse_identity():
     finally:
         native.lib = saved
     assert blobs_c == blobs_np
+
+
+_PROBE = ("from parquet_go_spark.kernels import native; "
+          "print(native.available())")
+
+
+def _import_native(tmpdir, **env) -> tuple[bool, str]:
+    """(native loaded, stderr) of a fresh interpreter importing the
+    kernel module with ``TMPDIR=tmpdir``."""
+    os.makedirs(tmpdir, exist_ok=True)  # else tempfile ignores TMPDIR
+    e = {k: v for k, v in os.environ.items()
+         if k not in ("PGS_NO_NATIVE", "CC")}
+    e.update(TMPDIR=str(tmpdir), PYTHONWARNINGS="always",
+             PYTHONPATH=os.pathsep.join(sys.path), **env)
+    p = subprocess.run([sys.executable, "-c", _PROBE], env=e,
+                       capture_output=True, text=True, timeout=300,
+                       check=True)
+    return p.stdout.split()[-1] == "True", p.stderr
+
+
+@pytest.mark.parametrize("plant", ["private", "group_writable_so",
+                                   "shared_dir"])
+def test_unsafe_build_dir_is_not_loaded(tmp_path, plant):
+    """A loadable .so planted in the per-uid build directory is dlopen'd
+    only when the directory and the file are writable by this uid
+    alone."""
+    if native.lib is None:
+        pytest.skip("no C toolchain in this environment")
+    cdir, so = native._so_path()
+    pdir = tmp_path / os.path.basename(cdir)
+    pdir.mkdir(mode=0o700)
+    pso = pdir / os.path.basename(so)
+    shutil.copyfile(so, pso)
+    os.chmod(pso, 0o775 if plant == "group_writable_so" else 0o755)
+    if plant == "shared_dir":
+        os.chmod(pdir, 0o777)
+    loaded, err = _import_native(tmp_path, CC="/bin/false")
+    assert loaded == (plant == "private")
+    assert ("not private" in err) == (plant != "private")
+
+
+def test_failed_build_warns_once_unless_disabled(tmp_path):
+    """A failed build falls back to numpy with one warning naming the
+    exception; PGS_NO_NATIVE=1 falls back silently."""
+    loaded, err = _import_native(tmp_path / "a", CC="/bin/false")
+    assert not loaded
+    assert err.count("native FSST kernel unavailable") == 1
+    assert "CalledProcessError" in err
+    loaded, err = _import_native(tmp_path / "b", CC="/bin/false",
+                                 PGS_NO_NATIVE="1")
+    assert not loaded
+    assert "native FSST kernel unavailable" not in err

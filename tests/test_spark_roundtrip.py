@@ -1510,35 +1510,44 @@ def test_items_df_contiguous_slices(spark, n):
     assert got == want
 
 
-def test_direct_write_is_deterministic(spark, tmp_path):
-    """Two direct writes of the same text-bearing listing give the same
-    chunk -> task grouping (contiguous slices of the chunk list) and
-    byte-identical chunk blobs: FSST symbol tables are reused across a
-    task's consecutive chunks, so the bytes depend on the grouping."""
+@pytest.mark.parametrize("mode", ["direct", "shuffle", "locality"])
+def test_write_is_deterministic(spark, tmp_path, mode):
+    """Two writes of the same text-bearing input in one write mode give
+    byte-identical chunk blobs and identical manifest entries: FSST
+    symbol tables are reused across a task's consecutive chunks, so the
+    bytes depend on the chunk -> task grouping. The direct path's
+    grouping is contiguous slices of the chunk list."""
     import pyarrow.parquet as pq
 
     files, _ = _write_direct_source(str(tmp_path / "src"), 240, 12,
                                     seed=11)
-    p = min(len(files), spark.sparkContext.defaultParallelism)
     volatile = ("attempt", "encode_s", "reused")
     runs = []
     for name in ("a", "b"):
         out = str(tmp_path / name)
-        table.write_table_direct(spark, files, out, resume=False)
+        if mode == "direct":
+            table.write_table_direct(spark, files, out, resume=False)
+        else:
+            table.write_table(spark.read.parquet(*files), out,
+                              num_chunks=8, resume=False,
+                              shuffle=mode == "shuffle")
         entries = sorted(manifest.load(out)["entries"],
                          key=lambda e: e["chunk_id"])
-        by_task: dict = {}
-        for i, e in enumerate(entries):
-            by_task.setdefault(e["attempt"], []).append(i)
-        n = len(entries)
-        assert sorted(by_task.values()) == [
-            list(range(k * n // p, (k + 1) * n // p)) for k in range(p)]
+        if mode == "direct":
+            p = min(len(files), spark.sparkContext.defaultParallelism)
+            by_task: dict = {}
+            for i, e in enumerate(entries):
+                by_task.setdefault(e["attempt"], []).append(i)
+            n = len(entries)
+            assert sorted(by_task.values()) == [
+                list(range(k * n // p, (k + 1) * n // p)) for k in range(p)]
         runs.append((
             [{k: v for k, v in e.items() if k not in volatile}
              for e in entries],
             [pq.read_table(os.path.join(out, e["file"])) for e in entries],
         ))
     (ents_a, blobs_a), (ents_b, blobs_b) = runs
+    assert len(ents_a) > 1
     assert ents_a == ents_b
     assert all(a.equals(b) for a, b in zip(blobs_a, blobs_b))
     assert any(m["codec"] == "fsst"
